@@ -22,6 +22,7 @@ import math
 import numpy as np
 
 from .sketch_common import (
+    fold_rows_by_rank,
     gather_uniform_rows,
     hash_family,
     popcount_rows,
@@ -297,7 +298,7 @@ def merge_groups_flat(
     """Grouped Bloom merge (``group_codes`` non-decreasing, all codes
     present), allocation-shaped per input encoding: sparse (v2)
     partials contribute set-bit items, dense (v1) partials OR as packed
-    byte matrices via ``np.bitwise_or.reduceat`` — the pre-sparse-wire
+    byte rows via ``fold_rows_by_rank`` — the pre-sparse-wire
     cost profile for the semi-join-prefilter shape (r4 review finding:
     item-ifying dense rows was an 8x unpackbits + 16B/bit sort blowup).
     Output rows are canonical: dense outputs come straight from the
@@ -312,11 +313,10 @@ def merge_groups_flat(
     n_heavy = int(heavy.sum())
     item_g = g[item_row]
     n_set = np.zeros(n_groups, dtype=np.int64)
-    Hmat = np.zeros((0, m_bytes), dtype=np.uint8)
+    Hmat = np.zeros((n_heavy, m_bytes), dtype=np.uint8)
     if n_heavy:
-        gh = g[v1_rows]  # nondecreasing (rows are group-sorted)
-        starts = np.flatnonzero(np.diff(gh, prepend=-1))
-        Hmat = np.bitwise_or.reduceat(M, starts, axis=0)
+        # rows are group-sorted, so their heavy slots are nondecreasing
+        fold_rows_by_rank(np.bitwise_or, Hmat, hrank[g[v1_rows]], M)
         hi = np.flatnonzero(heavy[item_g])
         if len(hi):  # OR sparse items of heavy groups into the matrix
             key = hrank[item_g[hi]] * m_bytes + (item_bit[hi] >> 3)

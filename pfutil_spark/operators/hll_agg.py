@@ -4,15 +4,15 @@ plan.
 
 Why hand-rolled two-phase instead of a GROUPED_AGG pandas UDF: Spark does
 NOT apply partial aggregation (map-side combine) to pandas UDAFs — every
-row of a group would cross the shuffle.  Here stage P (``mapInPandas``)
+row of a group would cross the shuffle.  Here stage P (``mapInArrow``)
 reduces each input partition to ONE constant-size sketch per group before
 any shuffle, so shuffle bytes are O(groups x partitions x sketch), not
 O(rows) — the property that makes the plan survive a 100x scale-up.
 
-    stage P  mapInPandas(partial)        per-partition PFADD accumulation
-    stage S  groupBy(keys[, salt])       the only shuffle
-    stage M  applyInPandas(merge)        register-wise max (PFMERGE)
-    eval     pf_count_col()              scalar pandas UDF (PFCOUNT)
+    stage P  mapInArrow(partial)         per-partition PFADD accumulation
+    stage S  repartition(keys[, salt])   the only shuffle
+    stage M  mapInArrow(merge)           register-wise max (PFMERGE)
+    eval     fused into stage M, or pf_count_col() (PFCOUNT)
 
 Skew: one hot key's partials (one per input partition) can be spread over
 ``salt_buckets`` intermediate merge tasks — legal because register-max is
@@ -30,18 +30,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from pfutil_spark.kernel import hll
+from pfutil_spark.kernel.sketch_common import (
+    check_arrow_binary_size,
+    fold_rows_by_rank,
+    segment_ranks,
+)
 
 SKETCH_COL = "sketch"
-
-
-def _to_bytes_list(col: pd.Series) -> list[bytes]:
-    """String/binary pandas column -> list of bytes (C-level encode)."""
-    if len(col) == 0:
-        return []
-    first = col.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        return list(col)
-    return list(col.astype("string").str.encode("utf-8"))
 
 
 def _out_schema(df: DataFrame, by: Sequence[str]) -> StructType:
@@ -95,22 +90,16 @@ def _group_codes(batch: "pa.RecordBatch", by: Sequence[str]) -> tuple[np.ndarray
 
 LINEAGE_COLS = ("_partition_id", "_rows_seen")
 
-# merge-stage strategy knobs: a work group is HEAVY (matrix max-reduceat)
-# when it has any dense partial or at least this many sparse items;
-# heavy chunks cap their register-matrix allocation at this many bytes.
-# The budget is deliberately SMALL (64 matrix rows): unpack_dense's
-# temporaries run ~230KB per row, glibc only recycles freed mmap'd
-# blocks up to ~32MB back into the arena, and this host faults fresh
-# pages at ~0.12GB/s (NOTES.md) — bounded chunks keep every merge
-# task's working set in warm, reused memory
+# merge-stage strategy knobs: a work group is HEAVY (register-row fold)
+# when it has any dense partial or at least this many sparse items.
+# Heavy chunks cap their register rows (one merged row per group, one
+# unpacked row per dense partial) at this many bytes. The budget is
+# deliberately SMALL (64 rows): unpack_dense's temporaries run ~230KB
+# per row, glibc only recycles freed mmap'd blocks up to ~32MB back into
+# the arena, and fresh pages fault in slowly (NOTES.md) — bounded chunks
+# keep every merge task's working set in warm, reused memory
 _HEAVY_ITEMS = 4096
 _MATRIX_BUDGET = 1 << 20
-
-
-def _segment_positions(sorted_codes: np.ndarray) -> np.ndarray:
-    from pfutil_spark.kernel.sketch_common import segment_ranks
-
-    return segment_ranks(sorted_codes)
 
 
 def _tiled_binary_array(item: bytes, n: int) -> "pa.Array":
@@ -337,9 +326,10 @@ def _merge_stage(
       canonical invalid-cache header PASS THROUGH untouched (an Arrow
       ``take`` — zero decode/encode; in the near-unique-key regime that
       is ~every group, which is what makes 10^6-group merges cheap)
-    * remaining groups batch-decode (one vectorized unpackbits for the
-      dense ones), register-max via ``np.maximum.reduceat`` over the
-      group-sorted stack, and re-encode canonically.
+    * remaining groups batch-decode and re-encode canonically. Groups
+      with a dense partial (or many sparse items) fold into one register
+      row each: dense partials by fan-in rank, sparse items with one
+      ``np.maximum.at``. The rest fold as (group, register, value) items.
 
     Correct for any interleaving because register-max is associative /
     commutative / idempotent (HllByteBuffer.java:341-398 semantics).
@@ -394,10 +384,6 @@ def _merge_stage(
         yield pa.record_batch(arrays, names=names)
 
     return target.mapInArrow(fn, out_schema)
-
-
-def _merge_stage_arrow(df: DataFrame, keys: list[str], sketch_col: str) -> DataFrame:
-    return _merge_stage(df, keys, sketch_col)
 
 
 def _salted_premerge(
@@ -518,12 +504,12 @@ def merge_record_batch(
         #   where materializing 16KB register rows would be a 1000x
         #   memory blowup.
         # * HEAVY groups (any dense partial, or >= _HEAVY_ITEMS sparse
-        #   items): stack their partials as a (rows, 16384) register
-        #   matrix (memory-bounded chunks) and np.maximum.reduceat —
-        #   dense merges are memory-bandwidth-bound there, while
-        #   item-ifying them costs a multi-million-item sort (measured
-        #   4x slower than the pandas engine on a 68-group x 64-partial
-        #   dense merge before this split).
+        #   items): one merged 16384-register row per group. Dense
+        #   partials are unpacked and max-folded into it by fan-in rank;
+        #   sparse partials never become rows, their decoded items go in
+        #   with np.maximum.at — item-ifying dense partials costs a
+        #   multi-million-item sort (measured 4x slower than the pandas
+        #   engine on a 68-group x 64-partial dense merge).
         work_code = np.repeat(
             np.arange(len(work_ids), dtype=np.int64), counts[work_ids]
         )  # dense code per work ROW, group-sorted like `rows`
@@ -552,53 +538,55 @@ def merge_record_batch(
         hd_pay_parts: list = []   # their packed 12288-byte payloads
         if heavy.any():
             R = hll.HLL_REGISTERS
-            dense_payload = hll.HLL_DENSE_SIZE - hll.HEADER_LEN
-            row_heavy = heavy[work_code]
-            hrows = np.flatnonzero(row_heavy)  # work rows of heavy groups
-            # assign heavy GROUPS to chunks by cumulative row offset so
-            # one chunk's matrix stays ~_MATRIX_BUDGET bytes (+ one
-            # group's fan-in; a group never splits across chunks)
-            hg_codes = np.flatnonzero(heavy)
-            hg_rows = np.bincount(work_code[hrows], minlength=n_wg)[hg_codes]
-            cum = np.cumsum(hg_rows) - hg_rows
-            rows_per_chunk = max(1, _MATRIX_BUDGET // (R * 1))
-            chunk_of_group = np.full(n_wg, -1, dtype=np.int64)
-            chunk_of_group[hg_codes] = cum // rows_per_chunk
-            chunk_of_row = chunk_of_group[work_code]  # -1 for light rows
-            slot_of_row = np.full(len(rows), -1, dtype=np.int64)
-            slot_of_row[hrows] = _segment_positions(chunk_of_row[hrows])
-            hitem_sel = np.flatnonzero(~light_sel)
-            item_chunk = chunk_of_row[item_row[hitem_sel]]
-            n_chunks = int(chunk_of_group[hg_codes].max()) + 1
-            for c in range(n_chunks):  # loop over CHUNKS, not groups
-                crows = np.flatnonzero(chunk_of_row == c)
-                mat = np.zeros((len(crows), R), dtype=np.uint8)
-                cdense = crows[enc_w[crows] == hll.ENC_DENSE]
-                if len(cdense):
-                    mat[slot_of_row[cdense]] = hll.unpack_dense(
-                        hll.gather_dense_payloads(wdata, woffs, cdense)
-                    )
-                ci = hitem_sel[item_chunk == c]
-                if len(ci):
-                    mat[slot_of_row[item_row[ci]], rr_s[ci]] = vv_s[ci]
-                cg = work_code[crows]  # nondecreasing
-                gstart = np.flatnonzero(np.diff(cg, prepend=-1))
-                merged = np.maximum.reduceat(mat, gstart, axis=0)
-                # merged groups that would encode DENSE skip
-                # item-ification entirely: pack the matrix rows straight
-                # to wire payloads (in the dense-partial regime that is
-                # ~every heavy group — the multi-million-item sort this
-                # avoids was the arrow engine's cost cliff there)
+            # chunks walk the heavy groups in code order, each taking one
+            # merged row then one row per dense partial, and cut every B
+            # rows. A hot group's dense rows may run on over several
+            # chunks, its merged row carried along: B + 1 rows at most
+            hg = np.flatnonzero(heavy)
+            hpos = np.cumsum(heavy) - 1  # work group -> heavy index
+            d_h = hpos[work_code[dense_rows]]  # nondecreasing
+            nd = np.bincount(d_h, minlength=len(hg))
+            first = np.cumsum(1 + nd) - (1 + nd)  # merged row's position
+            B = _MATRIX_BUDGET // R
+            g_c0, g_c1 = first // B, (first + nd) // B  # first/last chunk
+            d_c = (first[d_h] + 1 + segment_ranks(d_h)) // B
+            hitem = np.flatnonzero(~light_sel)
+            cs = np.arange(int(g_c1[-1]) + 2)
+            g_lo = np.searchsorted(g_c1, cs)  # chunk c: groups [lo, hi)
+            g_hi = np.searchsorted(g_c0, cs, side="right")
+            d_b = np.searchsorted(d_c, cs)
+            # sparse items go in with their group's first chunk
+            i_b = np.searchsorted(g_c0[hpos[item_g[hitem]]], cs)
+            carry = None
+            for c in range(len(cs) - 1):  # loop over CHUNKS, not groups
+                lo, hi = g_lo[c], g_hi[c]
+                merged = np.zeros((hi - lo, R), dtype=np.uint8)
+                if carry is not None:
+                    merged[0] = carry
+                dsel = slice(d_b[c], d_b[c + 1])
+                regs = hll.unpack_dense(
+                    hll.gather_dense_payloads(wdata, woffs, dense_rows[dsel])
+                )
+                fold_rows_by_rank(np.maximum, merged, d_h[dsel] - lo, regs)
+                ci = hitem[i_b[c] : i_b[c + 1]]
+                np.maximum.at(merged, (hpos[item_g[ci]] - lo, rr_s[ci]), vv_s[ci])
+                still_open = int(g_c1[hi - 1] > c)
+                carry = merged[-1] if still_open else None
+                merged = merged[: len(merged) - still_open]
+                cg = hg[lo : hi - still_open]
+                # merged groups that would encode DENSE skip item-ification
+                # entirely: pack the rows straight to wire payloads (in the
+                # dense-partial regime that is ~every heavy group)
                 nnz_m = np.count_nonzero(merged, axis=1)
                 sp_ok = (merged.max(axis=1) <= 32) & (
-                    nnz_m * 3 + 4 < dense_payload
+                    nnz_m * 3 + 4 < hll.HLL_DENSE_SIZE - hll.HEADER_LEN
                 )
                 if (~sp_ok).any():
-                    hd_code_parts.append(cg[gstart][~sp_ok])
+                    hd_code_parts.append(cg[~sp_ok])
                     hd_pay_parts.append(hll.pack_dense(merged[~sp_ok]))
                 if sp_ok.any():
                     rnz, cnz = np.nonzero(merged[sp_ok])
-                    gg_parts.append(cg[gstart][sp_ok][rnz])
+                    gg_parts.append(cg[sp_ok][rnz])
                     rr_parts.append(cnz.astype(np.int64))
                     vv_parts.append(merged[sp_ok][rnz, cnz])
         gg = np.concatenate(gg_parts)
@@ -621,8 +609,6 @@ def merge_record_batch(
                 vv,
                 n_present,
             )
-            from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
-
             check_arrow_binary_size(int(moffs[-1]))
             arrays.append(
                 pa.Array.from_buffers(
@@ -648,8 +634,6 @@ def merge_record_batch(
         if n_hd:
             # dense-merged heavy groups: canonical dense wire rows built
             # in one uniform buffer (header == _header(ENC_DENSE, None))
-            from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
-
             check_arrow_binary_size(n_hd * hll.HLL_DENSE_SIZE)
             out2d = np.zeros((n_hd, hll.HLL_DENSE_SIZE), dtype=np.uint8)
             out2d[:, 0:4] = np.frombuffer(hll.MAGIC, dtype=np.uint8)
@@ -694,7 +678,7 @@ def pf_merge(
     """Stage M: PFMERGE all partial sketches of a group into one.
 
     ``engine='arrow'`` (default) merges every group of a partition in one
-    vectorized pass (see :func:`_merge_stage_arrow`) — same bytes as the
+    vectorized pass (see :func:`_merge_stage`) — same bytes as the
     pandas engine (asserted by tests), but no per-group pandas calls, so
     it survives millions of groups. ``engine='pandas'`` keeps the
     original ``applyInPandas`` fold.
